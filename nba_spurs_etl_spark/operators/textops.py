@@ -171,32 +171,31 @@ def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: Memo for the heavyweight filter-expression builders below. Building
-#: c4_cols + repetition_cols costs ~1100 Py4J round-trips (~0.3 s warm,
-#: 1-3 s in throttled windows — measured r12, cProfile: the time is
-#: socket recv in py4j send_command) and the result is an immutable
-#: expression tree that every invocation rebuilds identically. Keyed by
-#: the JVM gateway identity so a restarted JVM can never serve stale
-#: java object handles; only string column names (the shape every
-#: caller uses) are memoized — Column-typed args build fresh. Results
-#: are bit-identical by construction: the SAME expression objects
-#: produce the same analyzed plan (bench plan fingerprints unchanged).
+#: Memo for ``c4_cols``: its per-language stopword arrays cost ~1100
+#: Py4J round-trips per build (cProfile: socket recv in py4j
+#: send_command), and the result is an immutable expression tree that
+#: every invocation rebuilds identically. Paired A/B at sf0.1, local[4],
+#: 10 alternating pairs in one session: text_c4_filters 0.395 s memo vs
+#: 0.536 s rebuilt, 10/10 wins, gap 0.141 s vs a 0.033 s IQR.
+#: ``repetition_cols`` is not memoized: the same memo there won 5/10
+#: pairs (text_repetition). Keyed by the JVM gateway object itself so a
+#: restarted JVM can never serve stale java object handles (the key
+#: holds a reference, so a dead gateway's id() cannot be reused); only
+#: string column names are memoized — Column-typed args build fresh.
 _COLS_MEMO: dict = {}
 
 
 def _cols_memo_key(builder: str, *args):
     """Memo key for an expression-builder call, or None when any arg
-    is not a plain string/None (Column-typed args build fresh) or no
+    is not a plain string (Column-typed args, and complex words
+    columns that ``_col_name_or_none`` maps to None, build fresh) or no
     JVM gateway is up yet."""
     from pyspark import SparkContext
 
     gw = SparkContext._gateway
-    if gw is None:
+    if gw is None or not all(isinstance(a, str) for a in args):
         return None
-    for a in args:
-        if a is not None and not isinstance(a, str):
-            return None
-    return (id(gw), builder) + args
+    return (gw, builder) + args
 
 
 def _col_name_or_none(c):
@@ -225,15 +224,6 @@ def repetition_cols(
     are hot: the expressions scan the word list O(words * distinct)
     times inside interpreted HOFs, and an inline split() re-tokenizes
     per scan (no codegen subexpression elimination there)."""
-    memo_key = (
-        _cols_memo_key(
-            "repetition_cols", text_col, _col_name_or_none(words_col)
-        )
-        if isinstance(text_col, str)
-        else None
-    )
-    if memo_key is not None and memo_key in _COLS_MEMO:
-        return dict(_COLS_MEMO[memo_key])
     w = words_col if words_col is not None else words(text_col)
     n = F.size(w)
     nd = F.size(F.array_distinct(w))
@@ -262,18 +252,13 @@ def repetition_cols(
     keep = (
         (dup_word_frac <= 0.63) & (top_word_frac <= 0.12) & (dup_bigram_frac <= 0.2)
     )
-    out = {
+    return {
         "n_words": n.cast("bigint"),
         "dup_word_frac": dup_word_frac,
         "top_word_frac": top_word_frac,
         "dup_bigram_frac": dup_bigram_frac,
         "gopher_keep": keep,
     }
-    if memo_key is not None:
-        if len(_COLS_MEMO) >= 32:
-            _COLS_MEMO.clear()
-        _COLS_MEMO[memo_key] = dict(out)
-    return out
 
 
 def repetition_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -530,30 +515,7 @@ def bpe_merge_table(
     # lazy: round 1's winner job materializes it (r11 — saves the
     # separate eager-materialization job; rounds 2+ read the cache)
     base = pre.localCheckpoint(eager=False)
-    # Fingerprint lineage (r11 review find): the output below is a
-    # LOCAL relation, which prints only its schema in the optimized
-    # plan — bench.py's plan fingerprint would go blind to upstream
-    # changes (tokenization, prefix_chars, round count) and stale
-    # timing medians could gate new code. Same hazard class as the
-    # bm25 pruned-path checkpoint (operators/search.py): embed a hash
-    # of the PRE-checkpoint sample plan + the round count as a marker
-    # COLUMN NAME on an empty checkpointed sentinel unioned into the
-    # result — LogicalRDD leaves keep their attribute names in the
-    # plan string, and the empty union changes no rows.
-    from .similarity import lineage_token
-
-    # lineage_token degrades to a per-call UNIQUE value (always-evict)
-    # when canonicalization fails — a constant fallback would freeze
-    # the fingerprint and stop evicting stale medians (ADVICE r11)
-    _lin = lineage_token(pre, extra=f"rounds={rounds}")
     out_schema = "round int, merged string, cnt bigint"
-    sentinel = (
-        spark.createDataFrame(
-            [], out_schema + f", _lineage_{_lin} tinyint"
-        )
-        .localCheckpoint(eager=True)
-        .drop(f"_lineage_{_lin}")
-    )
 
     def counts(merges: list[str]) -> DataFrame:
         st = F.col("st0")
@@ -613,6 +575,4 @@ def bpe_merge_table(
         out_rows.append(
             (r, row["pr"].replace(sep, ""), row["cnt"])
         )
-    return spark.createDataFrame(out_rows, out_schema).unionByName(
-        sentinel
-    )
+    return spark.createDataFrame(out_rows, out_schema)

@@ -72,8 +72,10 @@ def _work_dir(tag: str, sf_dir: str) -> str:
     # clear BOTH candidate bases, not just the one selected now: the
     # headroom probe re-runs each invocation, so a flip (shm filling
     # between calls) must not strand the previous few-hundred-MB
-    # scratch copy in tmpfs RAM until reboot (ADVICE r11)
-    for b in {"/dev/shm", tmp_default}:
+    # scratch copy in tmpfs RAM until reboot. The unmodified default
+    # base (/tmp) is swept too: a run before TMPDIR redirected scratch
+    # left its copy there
+    for b in {"/dev/shm", "/tmp", tmp_default}:
         shutil.rmtree(os.path.join(b, name), ignore_errors=True)
     base = "/dev/shm" if _shm_usable() else tmp_default
     return os.path.join(base, name)

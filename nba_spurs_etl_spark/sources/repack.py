@@ -87,12 +87,15 @@ def ensure_repacked(
         if not os.path.exists(src):
             continue
         dst = os.path.join(out, f"{name}.parquet")
-        meta = pq.ParquetFile(src).metadata
-        needs_split = (
-            name not in KEEP_SINGLE_FILE
-            and meta.num_rows >= min_rows
-            and meta.num_row_groups < parallelism
-        )
+        # a part-file directory (any Spark-written table) is already
+        # laid out at split granularity
+        needs_split = name not in KEEP_SINGLE_FILE and os.path.isfile(src)
+        if needs_split:
+            meta = pq.ParquetFile(src).metadata
+            needs_split = (
+                meta.num_rows >= min_rows
+                and meta.num_row_groups < parallelism
+            )
         if not needs_split:
             if os.path.islink(dst):
                 if os.readlink(dst) == src:

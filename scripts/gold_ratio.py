@@ -25,8 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nba_spurs_etl_spark.plans.catalog import queries  # noqa: E402
-from nba_spurs_etl_spark.session import default_parallelism, get_spark  # noqa: E402
-from nba_spurs_etl_spark.sources.repack import ensure_repacked  # noqa: E402
+from nba_spurs_etl_spark.session import get_spark, warm_session  # noqa: E402
 
 GOLD = [
     "gold_summary_by_season",
@@ -57,15 +56,10 @@ BASELINE = {
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("gold-ratio")
-    sf_dir = ensure_repacked(sf_dir, default_parallelism())
-    qs = queries()
     # same dbt accounting as bench.py: silver fixtures + the upstream
     # ref() materialized before anything is timed
-    for t in ("silver_games", "silver_player_stats", "silver_players",
-              "silver_teams", "silver_salaries", "silver_free_agents",
-              "silver_injuries"):
-        qs[t](spark, sf_dir).count()
-    qs["gold_players_recommendations"](spark, sf_dir).count()
+    sf_dir = warm_session(spark, sf_dir)
+    qs = queries()
 
     times: dict[str, list[float]] = {g: [] for g in GOLD}
     for rnd in range(N_ROUNDS):

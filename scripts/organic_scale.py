@@ -25,9 +25,9 @@ Design:
 - customer: unique c_custkey 0..N-1 with the TPC-H-style
   'Customer#%09d' name derived from the key — near-matches arise
   organically from numeric-suffix adjacency instead of replication.
-- Protocol per entry per corpus: bench.py's warm protocol (one cold
-  run absorbed, second run reported, noop sink, python workers
-  pre-warmed).
+- Protocol per entry per corpus: bench.py's session warm-up
+  (``session.warm_session``), then one cold run absorbed and the
+  second run reported (noop sink).
 
 Output: one table on stdout (entry, t_1x, t_10x, organic slope,
 adversarial BENCH_SF1 slope for contrast) + organic_scale.json beside
@@ -49,7 +49,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from nba_spurs_etl_spark.plans.catalog import queries  # noqa: E402
-from nba_spurs_etl_spark.session import default_parallelism, get_spark  # noqa: E402
+from nba_spurs_etl_spark.session import get_spark, warm_session  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -199,20 +199,9 @@ def main() -> int:
                   file=sys.stderr)
         dirs[k] = dst
 
-    # python-worker + executor warm-up, as bench.py does
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def _py_warm(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        yield from batches
-
-    n_warm = 2 * default_parallelism()
-    spark.range(n_warm).repartition(n_warm).mapInPandas(
-        _py_warm, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
+    # the same session warm-up as bench.py, over the source testdata
+    # (it pays session-level costs; the organic corpora are timed below)
+    warm_session(spark, SRC)
     qs = queries()
 
     def warm_run(name: str, sf_dir: str) -> tuple[float, int]:

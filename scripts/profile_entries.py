@@ -3,21 +3,14 @@
 
 Usage:  python scripts/profile_entries.py [--plans-out DIR] [--runs N] name...
 
-Reproduces bench.py's session + warm-up protocol (repacked layout,
-silver caches, JIT/py-worker warm-up), then for each named catalog
-entry: runs the query to the noop sink ``--runs`` times (cold first,
-then warm), reporting wall seconds plus job/stage/task counts from the
-status tracker (scheduling overhead shows up as job count x fixed
-cost), and optionally dumps ``explain("formatted")`` to
-``<plans-out>/<name>.txt`` for the before/after evidence the round
-deliverables require.
-
-NOTE: the session + warm-up block below deliberately MIRRORS
-bench.py's protocol (repack, table/silver warm-ups, summary_rank noop,
-python-worker fork, cpu_hash probe shape) so per-entry numbers are
-comparable to bench results — keep the two in sync when the bench
-protocol changes (they are separate because bench.py's warm-up is
-inline in its main() and the bench file is driver-contract-sensitive).
+Warms the session exactly as bench.py does (``session.warm_session``:
+repacked layout, silver caches, JIT and Python-worker warm-up), then
+for each named catalog entry: runs the query to the noop sink
+``--runs`` times (cold first, then warm), reporting wall seconds plus
+job/stage/task counts from the status tracker (scheduling overhead
+shows up as job count x fixed cost), and optionally dumps
+``explain("formatted")`` to ``<plans-out>/<name>.txt`` for the
+before/after evidence the round deliverables require.
 """
 
 from __future__ import annotations
@@ -40,9 +33,11 @@ def main() -> int:
     args = ap.parse_args()
 
     from nba_spurs_etl_spark.plans.catalog import queries
-    from nba_spurs_etl_spark.session import default_parallelism, get_spark
-    from nba_spurs_etl_spark.sources.catalog import TESTDATA_TABLES, load_table
-    from nba_spurs_etl_spark.sources.repack import ensure_repacked
+    from nba_spurs_etl_spark.session import (
+        default_parallelism,
+        get_spark,
+        warm_session,
+    )
 
     qs = queries()
     unknown = [n for n in args.names if n not in qs]
@@ -52,27 +47,7 @@ def main() -> int:
 
     spark = get_spark("profile-entries")
     sc = spark.sparkContext
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    sf_dir = ensure_repacked(args.sf_dir, default_parallelism())
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).limit(1).count()
-    for t in ("silver_games", "silver_player_stats", "silver_players",
-              "silver_teams", "silver_salaries", "silver_free_agents",
-              "silver_injuries"):
-        qs[t](spark, sf_dir).count()
-    qs["gold_players_recommendations"](spark, sf_dir).count()
-    qs["summary_rank"](spark, sf_dir).write.format("noop").mode(
-        "overwrite").save()
-
-    def _py_warm(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        for b in batches:
-            yield b
-
-    n_warm = 2 * default_parallelism()
-    spark.range(n_warm).repartition(n_warm).mapInPandas(
-        _py_warm, "id long").write.format("noop").mode("overwrite").save()
+    sf_dir = warm_session(spark, args.sf_dir)
 
     st = sc.statusTracker()
 

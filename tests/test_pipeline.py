@@ -267,6 +267,40 @@ def test_repack_layout_equivalence(spark):
         assert before == after
 
 
+def test_warm_session_returns_the_repacked_dir(spark):
+    """The shared timing warm-up (bench.py and the scripts) hands back
+    the repacked layout the timed runs read, with every catalog table
+    readable there."""
+    from nba_spurs_etl_spark.session import default_parallelism, warm_session
+    from nba_spurs_etl_spark.sources.catalog import TESTDATA_TABLES, load_table
+    from nba_spurs_etl_spark.sources.repack import ensure_repacked
+
+    from .conftest import SF_SMOKE
+
+    out = warm_session(spark, SF_SMOKE)
+    assert out == ensure_repacked(SF_SMOKE, default_parallelism())
+    for t in TESTDATA_TABLES:
+        assert load_table(spark, out, t).count() == load_table(
+            spark, SF_SMOKE, t
+        ).count(), t
+
+
+def test_repack_passes_part_file_directories_through(spark, tmp_path):
+    """A Spark-written table (a directory of part-files, as the 10x
+    replicas are) is already laid out: ensure_repacked symlinks it
+    through instead of opening it as one parquet file."""
+    import os
+
+    from nba_spurs_etl_spark.sources.repack import ensure_repacked
+
+    sf = tmp_path / f"sfparts_{tmp_path.name}"
+    src = str(sf / "lineitem.parquet")
+    spark.range(50).repartition(2).write.parquet(src)
+    dst = os.path.join(ensure_repacked(str(sf), 8, min_rows=1), "lineitem.parquet")
+    assert os.path.islink(dst) and os.readlink(dst) == src
+    assert spark.read.parquet(dst).count() == 50
+
+
 def test_dynamic_partition_overwrite_backfill(spark, tmp_path):
     """Idempotent daily backfill: re-running one day's aggregation with
     partitionOverwriteMode=dynamic must replace ONLY that day's

@@ -919,3 +919,30 @@ def test_tws_registration_tracks_protobuf_capability():
         have = False
     assert sq.tws_available() == have
     assert ("stream_user_profile_tws" in queries()) == sq.tws_available()
+
+
+def test_bench_records_are_fresh_for_every_registered_entry():
+    """The bench of record must track the registry the way
+    COVERAGE.md does — BENCH_DETAIL.json is rewritten
+    wholesale by every bench run, so a registered entry with no row
+    means the bench has not run since the entry was added (stale bench
+    of record). Fails loudly here instead of surfacing as an
+    unexplained hole in the round's BENCH_r{N}.json."""
+    import json
+    import os
+
+    from nba_spurs_etl_spark.plans.registry import queries
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "BENCH_DETAIL.json")) as f:
+        detail = json.load(f)
+    qs = set(queries())
+    detail_q = set(detail["queries"])
+    assert not qs - detail_q, (
+        "registered entries missing from BENCH_DETAIL (run bench.py): "
+        f"{sorted(qs - detail_q)[:10]}"
+    )
+    assert not detail_q - qs, (
+        "BENCH_DETAIL rows for entries no longer registered (stale "
+        f"bench of record; run bench.py): {sorted(detail_q - qs)[:10]}"
+    )

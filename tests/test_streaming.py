@@ -928,3 +928,31 @@ def test_mg_snapshot_multibatch_bound_and_retry(spark, tmp_path):
         for r in mg_heavy_hitters(allb, "event_type", "user_id", m).collect()
     )
     assert a == b
+
+
+def test_stream_work_dir_sweeps_default_tmp_when_tmpdir_redirects(
+    tmp_path, monkeypatch
+):
+    """A scratch copy left under the default temp base (/tmp) by an
+    earlier run is removed once TMPDIR redirects scratch elsewhere —
+    otherwise the redirect strands it until reboot."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    from nba_spurs_etl_spark.plans.stream_queries import _work_dir
+
+    sf_dir = str(tmp_path / "src")
+    name = "spark_stream_sweep_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    stale = os.path.join("/tmp", name)
+    os.makedirs(os.path.join(stale, "snap"))
+    redirected = tmp_path / "scratch"
+    redirected.mkdir()
+    monkeypatch.setenv("TMPDIR", str(redirected))
+    monkeypatch.setattr(tempfile, "tempdir", str(redirected))
+    try:
+        assert _work_dir("sweep", sf_dir) == os.path.join(str(redirected), name)
+        assert not os.path.exists(stale)
+    finally:
+        shutil.rmtree(stale, ignore_errors=True)
