@@ -927,8 +927,8 @@ def connected_components(
     # EAGER checkpoints + isEmpty probe (r12 adjudication of the r11
     # lazy+count fusion, VERDICT r11 item 1): the lazy variant ran one
     # job per round instead of two, but the driver's r11 PERF measured
-    # three consumer entries 15-30% slower, and the repo's interleaved
-    # paired A/B (scripts/ab_cc.py, 6 ABBA pairs per entry, one
+    # three consumer entries 15-30% slower, and the r12 VERDICT
+    # adjudication (interleaved paired A/B, 6 ABBA pairs per entry, one
     # session) confirmed it — lazy+count medians were 1.04-1.13x the
     # eager+isEmpty shape on 6 of 7 consumer entries. The fused probe
     # is a full-scan count() whose aggregate sits on the critical
@@ -1094,8 +1094,8 @@ def connected_components_star(
     # EAGER checkpoints (r12 adjudication, VERDICT r11 item 1): the
     # r11 lazy variant piggybacked materialization on the fingerprint
     # probe (one job per round instead of two), but the driver
-    # measured dedup_components_star 0.70x and the repo's interleaved
-    # paired A/B (scripts/ab_cc.py) confirmed lazy+fused-probe medians
+    # measured dedup_components_star 0.70x and the r12 VERDICT
+    # adjudication (interleaved paired A/B) confirmed lazy+fused-probe medians
     # 1.08x this eager shape — the full-scan fingerprint aggregate on
     # the critical path costs more than the extra cheap probe job.
     # Reverted on measurement; see connected_components for the full

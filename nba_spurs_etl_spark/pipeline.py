@@ -35,7 +35,8 @@ def run_pipeline(
 
     Returns the gold DataFrames; with ``materialize_gold`` they are
     also written as Parquet under <work_dir>/gold (the dbt
-    CREATE TABLE AS materialization, S15)."""
+    CREATE TABLE AS materialization, S15) and the quality checks run
+    over the written Parquet instead of the lazy frames."""
     bronze_dir = os.path.join(work_dir, "bronze")
     bronze.write_all(spark, bronze_dir)
 
@@ -50,12 +51,18 @@ def run_pipeline(
     }
     gold_tables = gold.build_all(persisted)
 
+    checked = gold_tables
     if materialize_gold:
+        gold_dir = os.path.join(work_dir, "gold")
         for name, df in gold_tables.items():
-            df.write.mode("overwrite").parquet(
-                os.path.join(work_dir, "gold", name)
-            )
+            df.write.mode("overwrite").parquet(os.path.join(gold_dir, name))
+        # check what was written: scanning the gold Parquet is far
+        # cheaper than re-running every gold model for the checks
+        checked = {
+            name: spark.read.parquet(os.path.join(gold_dir, name))
+            for name in gold_tables
+        }
 
     if run_quality:
-        quality.run_checks(gold_tables)
+        quality.run_checks(checked)
     return gold_tables

@@ -1,17 +1,22 @@
 """Data-quality assertions (the reference's 12 dbt schema tests).
 
-Each check compiles to a violation count that must be 0, exactly like
+Each check is a violation predicate whose count must be 0, exactly like
 dbt's not_null / accepted_values tests
 (``/root/reference/dbt/models/spurs_analysis/spurs_analysis.yml``).
 ``GOLD_CHECKS`` is the reference's test suite verbatim; ``run_checks``
-evaluates any suite against a dict of DataFrames.
+evaluates any suite against a dict of DataFrames as ONE query: one
+single-row ``count_if`` aggregate per table, crossJoined, one action.
+On lazy frames a separate count per check would re-run the table's
+whole plan each time; the one query runs each plan once, and the
+per-table stages side by side.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -26,18 +31,19 @@ class Check:
     def name(self) -> str:
         return f"{self.kind}:{self.table}.{self.column}"
 
-    def violations(self, df: DataFrame) -> int:
+    @property
+    def predicate(self) -> Column:
+        """True on a violating row."""
         if self.kind == "not_null":
-            pred = F.col(self.column).isNull()
-        elif self.kind == "accepted_values":
+            return F.col(self.column).isNull()
+        if self.kind == "accepted_values":
             # dbt's accepted_values test EXCLUDES NULLs (its compiled
             # `column NOT IN (...)` is NULL for NULL input, never
             # selected) — counting NULLs here would fail tables the
-            # reference suite passes; nullability is not_null's job
-            pred = ~F.col(self.column).isin(*self.values)
-        else:
-            raise ValueError(f"unknown check kind {self.kind!r}")
-        return df.filter(pred).count()
+            # reference suite passes; nullability is not_null's job.
+            # count_if skips a NULL predicate exactly as filter does.
+            return ~F.col(self.column).isin(*self.values)
+        raise ValueError(f"unknown check kind {self.kind!r}")
 
 
 def not_null(table: str, column: str) -> Check:
@@ -76,7 +82,16 @@ def run_checks(
 ) -> dict[str, int]:
     """Violation count per check; raises QualityError on any failure."""
     checks = GOLD_CHECKS if checks is None else checks
-    results = {c.name: c.violations(tables[c.table]) for c in checks}
+    # positional aliases: check names may repeat a table/column or hold
+    # characters that are not plain identifiers
+    by_table: dict[str, list[Column]] = {}
+    for i, c in enumerate(checks):
+        by_table.setdefault(c.table, []).append(
+            F.count_if(c.predicate).alias(f"c{i}")
+        )
+    rows = [tables[t].agg(*counts) for t, counts in by_table.items()]
+    row = reduce(DataFrame.crossJoin, rows).first() if rows else None
+    results = {c.name: row[f"c{i}"] for i, c in enumerate(checks)}
     failed = {k: v for k, v in results.items() if v}
     if failed:
         raise QualityError(f"quality checks failed: {failed}")

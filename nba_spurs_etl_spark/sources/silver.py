@@ -7,8 +7,9 @@ primary key. Spark specifics:
 - ``primitivesAsString`` gives the all-VARCHAR silver type system
   (SURVEY §1.2) without per-column casts;
 - PK uniqueness cannot be *enforced* by Spark (no constraints) — it is
-  checked (``validate_pk``) and raises like the reference's INSERT
-  would on duplicates;
+  checked (``validate_pk``; ``load_all`` checks every keyed table in
+  one action) and raises like the reference's INSERT would on
+  duplicates;
 - storage is Parquet (columnar upgrade; semantics preserved because
   gold always re-casts from string).
 
@@ -18,8 +19,10 @@ The load map (table -> PK) is the reference's dict at dags:427-435.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..normalize import normalize_columns
 
@@ -72,8 +75,6 @@ def read_entity(
     elif fmt == "csv":
         df = spark.read.option("header", "true").option("mode", mode).csv(path)
     elif fmt in ("parquet", "orc"):
-        from pyspark.sql import functions as F
-
         raw = getattr(spark.read, fmt)(path)
         df = raw.select([F.col(c).cast("string").alias(c) for c in raw.columns])
     else:
@@ -81,16 +82,25 @@ def read_entity(
     return normalize_columns(df)
 
 
-def validate_pk(df: DataFrame, pk: tuple[str, ...]) -> int:
-    """Number of duplicated PK tuples (0 = valid)."""
-    from pyspark.sql import functions as F
-
+def _duplicate_keys(df: DataFrame, pk: tuple[str, ...]) -> DataFrame:
+    """One row per PK tuple that occurs more than once."""
     return (
         df.groupBy(*pk)
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
-        .count()
     )
+
+
+def _pk_violation(name: str, dups: int, pk: tuple[str, ...]) -> PrimaryKeyViolation:
+    return PrimaryKeyViolation(
+        f"silver.{name}: {dups} duplicated PK tuple(s) on {pk} "
+        "(the reference's INSERT would abort here, dags:411-413)"
+    )
+
+
+def validate_pk(df: DataFrame, pk: tuple[str, ...]) -> int:
+    """Number of duplicated PK tuples (0 = valid)."""
+    return _duplicate_keys(df, pk).count()
 
 
 def load_silver_table(
@@ -104,18 +114,32 @@ def load_silver_table(
     if check_pk and pk is not None:
         dups = validate_pk(df, pk)
         if dups:
-            raise PrimaryKeyViolation(
-                f"silver.{name}: {dups} duplicated PK tuple(s) on {pk} "
-                "(the reference's INSERT would abort here, dags:411-413)"
-            )
+            raise _pk_violation(name, dups, pk)
     return df
 
 
 def load_all(spark: SparkSession, bronze_dir: str) -> dict[str, DataFrame]:
-    """The reference's insert_all_files (drop+reload of all 7 tables)."""
-    return {
-        name: load_silver_table(spark, bronze_dir, name) for name in LOAD_MAP
+    """The reference's insert_all_files (drop+reload of all 7 tables).
+
+    Every keyed table's duplicate count is one single-row aggregate;
+    they are crossJoined and evaluated in ONE action, and the first
+    failing table in LOAD_MAP order raises."""
+    tables = {
+        name: load_silver_table(spark, bronze_dir, name, check_pk=False)
+        for name in LOAD_MAP
     }
+    keyed = [(name, pk) for name, pk in LOAD_MAP.items() if pk is not None]
+    counts = reduce(
+        DataFrame.crossJoin,
+        [
+            _duplicate_keys(tables[name], pk).agg(F.count(F.lit(1)).alias(f"d{i}"))
+            for i, (name, pk) in enumerate(keyed)
+        ],
+    ).first()
+    for i, (name, pk) in enumerate(keyed):
+        if counts[f"d{i}"]:
+            raise _pk_violation(name, counts[f"d{i}"], pk)
+    return tables
 
 
 def save_warehouse(

@@ -51,6 +51,157 @@ def test_quality_catches_bad_values(spark, gold_tables):
         quality.run_checks(broken)
 
 
+def _quality_frames(spark):
+    """Two crafted tables: NULLs and one bad value in an accepted_values
+    column, NULLs in not_null columns; the second table's name holds the
+    characters check names are built from."""
+    t1 = spark.createDataFrame(
+        [("p", 1), ("q", None), (None, 2), ("r", 3), (None, None)],
+        "x string, y int",
+    )
+    t2 = spark.createDataFrame(
+        [("Home",), ("Away",), ("Neutral",), (None,)], "location string"
+    )
+    return {"t1": t1, "odd.tbl:2": t2}
+
+
+def test_fused_counts_match_per_check_filter(spark):
+    """The one-query suite reports exactly the per-check
+    ``filter(pred).count()`` of dbt's compiled SQL, NULLs excluded from
+    accepted_values, with violations in two tables reported together."""
+    tables = _quality_frames(spark)
+    t1, t2 = tables["t1"], tables["odd.tbl:2"]
+    checks = [
+        quality.not_null("t1", "x"),
+        quality.accepted_values("odd.tbl:2", "location", ("Home", "Away")),
+        quality.accepted_values("t1", "x", ("p", "q")),
+        quality.not_null("t1", "y"),
+    ]
+    want = {
+        "not_null:t1.x": t1.filter("x IS NULL").count(),
+        "accepted_values:odd.tbl:2.location": t2.filter(
+            "location NOT IN ('Home', 'Away')"
+        ).count(),
+        "accepted_values:t1.x": t1.filter("x NOT IN ('p', 'q')").count(),
+        "not_null:t1.y": t1.filter("y IS NULL").count(),
+    }
+    assert want == {
+        "not_null:t1.x": 2,
+        "accepted_values:odd.tbl:2.location": 1,
+        "accepted_values:t1.x": 1,
+        "not_null:t1.y": 2,
+    }
+    with pytest.raises(quality.QualityError) as err:
+        quality.run_checks(tables, checks)
+    assert str(err.value) == f"quality checks failed: {want}"
+    assert "t1." in str(err.value) and "odd.tbl:2." in str(err.value)
+
+    # NULLs alone never fail accepted_values; a passing suite returns
+    # every count, in suite order
+    passing = [
+        quality.accepted_values("t1", "x", ("p", "q", "r")),
+        quality.accepted_values("odd.tbl:2", "location", ("Home", "Away", "Neutral")),
+    ]
+    got = quality.run_checks(tables, passing)
+    assert list(got.items()) == [
+        ("accepted_values:t1.x", 0),
+        ("accepted_values:odd.tbl:2.location", 0),
+    ]
+
+
+def test_same_column_different_kinds_do_not_collide(spark):
+    tables = _quality_frames(spark)
+    checks = [
+        quality.accepted_values("t1", "y", ("1", "2", "3")),
+        quality.not_null("t1", "y"),
+    ]
+    with pytest.raises(quality.QualityError) as err:
+        quality.run_checks(tables, checks)
+    assert str(err.value) == "quality checks failed: {'not_null:t1.y': 2}"
+
+
+def test_run_checks_empty_suite(spark):
+    assert quality.run_checks(_quality_frames(spark), []) == {}
+    assert quality.run_checks({}, []) == {}
+
+
+def test_unknown_check_kind_raises(spark):
+    with pytest.raises(ValueError, match="unknown check kind 'unique'"):
+        quality.run_checks(
+            _quality_frames(spark), [quality.Check("t1", "x", "unique")]
+        )
+
+
+def test_gold_suite_is_one_action(gold_tables, monkeypatch):
+    """All 12 checks run as one DataFrame action (nested calls, such as
+    first() going through take() and collect(), count once)."""
+    cls = type(gold_tables["home_vs_away"])
+    actions, depth = [], [0]
+
+    def counted(name):
+        orig = getattr(cls, name)
+
+        def wrapper(self, *args, **kwargs):
+            if not depth[0]:
+                actions.append(name)
+            depth[0] += 1
+            try:
+                return orig(self, *args, **kwargs)
+            finally:
+                depth[0] -= 1
+
+        return wrapper
+
+    for name in ("first", "head", "take", "collect", "count", "isEmpty",
+                 "toLocalIterator", "toPandas"):
+        monkeypatch.setattr(cls, name, counted(name))
+    results = quality.run_checks(gold_tables)
+    assert len(results) == 12 and not any(results.values())
+    assert actions == ["first"]
+
+
+def test_materialized_pipeline_checks_written_gold(
+    spark, gold_tables, tmp_path, monkeypatch
+):
+    """With materialize_gold the checks read the gold Parquet just
+    written, not the lazy frames (which would re-run every model)."""
+    import os
+
+    checked, original = {}, quality.run_checks
+
+    def capture(tables, checks=None):
+        checked.update(tables)
+        return original(tables, checks)
+
+    monkeypatch.setattr(quality, "run_checks", capture)
+    work = str(tmp_path)
+    run_pipeline(spark, work, materialize_gold=True)
+    assert set(checked) == set(gold_tables)
+    for name, df in checked.items():
+        files = df.inputFiles()
+        gold_dir = os.path.join(work, "gold", name)
+        assert files and all(gold_dir in f for f in files), (name, files)
+
+
+def test_load_all_names_first_pk_violation(spark, tmp_path):
+    """Duplicate PKs in the second and fourth keyed tables: the one
+    fused check raises for the first of them in LOAD_MAP order."""
+    from nba_spurs_etl_spark.sources import bronze, silver
+
+    d = str(tmp_path / "bronze")
+    bronze.write_all(spark, d)
+    for name in ("players", "free_agents"):
+        df = bronze.ENTITY_BUILDERS[name](spark)
+        df.unionByName(df.limit(1)).write.mode("overwrite").json(f"{d}/{name}")
+    keyed = [n for n, pk in silver.LOAD_MAP.items() if pk is not None]
+    assert keyed.index("players") == 1
+    with pytest.raises(PrimaryKeyViolation) as err:
+        silver.load_all(spark, d)
+    assert str(err.value).startswith(
+        "silver.players: 1 duplicated PK tuple(s) on ('player_id', 'season')"
+    )
+
+
 def test_pk_validation_raises_on_duplicates(spark):
     teams = synth.build_teams(spark)
     assert validate_pk(teams, ("id",)) == 0
